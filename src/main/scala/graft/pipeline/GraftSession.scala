@@ -64,13 +64,9 @@ object GraftSession {
       // discarded. Flip back on for workloads writing low-cardinality
       // string columns at volume.
       .config("spark.hadoop.parquet.enable.dictionary", "false")
-      // Parquet page write-checksums off (PerfLab crcab, 3 interleaved
-      // rounds, off won all three, best 6.70 vs 6.98 s full pipeline):
-      // pure CPU on the sink-write path, and the format treats page CRCs
-      // as optional so every reader is unaffected. Trade-off: no
-      // page-level corruption detection on sink files — re-enable where
-      // long-lived storage integrity outweighs write throughput.
-      .config("spark.hadoop.parquet.page.write-checksum.enabled", "false")
+      // Parquet page write-checksums stay ON session-wide (the dedup state
+      // snapshots keep their corruption detection); Sinks.write turns them
+      // off for the sink files, where they were measured.
       // Columnar-cache compression OFF (PerfLab cacheab, 6 interleaved
       // rounds across two contention epochs: raw won 4/6, best 6.21 s vs
       // 7.39 s full pipeline): the routed cache's dominant column is the

@@ -38,11 +38,13 @@ trait StateBackend {
     * [[Schemas.knownContent]] schema. */
   def load(spark: SparkSession, nowEpochSec: Long): DataFrame
 
-  /** Durably commit the batch's ids. Returns the number of rows committed,
-    * computed from storage metadata — callers use it for run stats without
-    * re-evaluating the (possibly expensive) `ids` lineage. */
+  /** Durably commit the batch's ids. Returns the number of rows committed:
+    * `knownRows` when the caller already counted `ids` (the pipeline counts
+    * its batch in flight), otherwise a count from storage metadata — never
+    * a re-evaluation of the (possibly expensive) `ids` lineage. */
   def commit(spark: SparkSession, ids: DataFrame, idCol: String,
-             expirationEpochSec: Long, commitEpochSec: Long): Long
+             expirationEpochSec: Long, commitEpochSec: Long,
+             knownRows: Long = -1L): Long
 
   /** Cheap upper-bound state row count for the bloom-threshold decision in
     * [[StateStore.dedup]]; -1 = unknown (forces a count there). */
@@ -57,10 +59,11 @@ final class SnapshotStateBackend(val store: StateStore) extends StateBackend {
   def load(spark: SparkSession, nowEpochSec: Long): DataFrame =
     store.load(spark, nowEpochSec)
   def commit(spark: SparkSession, ids: DataFrame, idCol: String,
-             expirationEpochSec: Long, commitEpochSec: Long): Long = {
+             expirationEpochSec: Long, commitEpochSec: Long, knownRows: Long): Long = {
     val snap = store.commit(spark, ids, idCol, expirationEpochSec, commitEpochSec)
-    // parquet-footer metadata count of exactly the delta just written
-    spark.read.parquet(store.snapshotPath(snap)).count()
+    // else: parquet-footer metadata count of exactly the delta just written
+    if (knownRows >= 0) knownRows
+    else spark.read.parquet(store.snapshotPath(snap)).count()
   }
   override def sizeHint(spark: SparkSession): Long = store.liveRowCount(spark)
   override def currentVersion: Option[Int] = store.currentSnapshot
@@ -122,7 +125,7 @@ final class CatalogStateBackend(
       .filter(col("expiration") > timestamp_seconds(lit(nowEpochSec)))
 
   def commit(spark: SparkSession, ids: DataFrame, idCol: String,
-             expirationEpochSec: Long, commitEpochSec: Long): Long = {
+             expirationEpochSec: Long, commitEpochSec: Long, knownRows: Long): Long = {
     val next = version(spark) + 1
     val rows = ids.select(
       col(idCol).cast("string").as("content_id"),
@@ -140,12 +143,14 @@ final class CatalogStateBackend(
     // saveAsTable(Append) is the supported path there and creates the
     // table on first commit.
     if (format == "parquet")
-      rows.write.format(format).partitionBy("snapshot_id")
+      rows.write.format(format).options(StateStore.DurableWrite).partitionBy("snapshot_id")
         .mode("append").saveAsTable(table)
-    else if (exists(spark)) rows.writeTo(table).append()
-    else rows.writeTo(table).using(format)
+    else if (exists(spark)) rows.writeTo(table).options(StateStore.DurableWrite).append()
+    else rows.writeTo(table).options(StateStore.DurableWrite).using(format)
       .partitionedBy(col("snapshot_id")).create()
-    val committed = spark.table(table).filter(col("snapshot_id") === next).count()
+    val committed =
+      if (knownRows >= 0) knownRows
+      else spark.table(table).filter(col("snapshot_id") === next).count()
     // roll the memoized count forward by exactly the delta just written —
     // the next sizeHint call is then free (no table scan)
     if (cachedCountVersion == lastVersion && cachedCount >= 0L)

@@ -190,7 +190,7 @@ class StateStore(val dir: String) {
         timestamp_seconds(lit(commitEpochSec)).as("committed_at"),
         spark_partition_id().as("partition_id"),
         lit(next).as("snapshot_id"))
-      .write.mode("overwrite").parquet(snapshotPath(next))
+      .write.mode("overwrite").options(StateStore.DurableWrite).parquet(snapshotPath(next))
     swapPointer(next)
     next
   }
@@ -206,7 +206,7 @@ class StateStore(val dir: String) {
     val merged = spark.read.parquet(livePaths: _*)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    merged.write.mode("overwrite").parquet(snapshotPath(n + 1))
+    merged.write.mode("overwrite").options(StateStore.DurableWrite).parquet(snapshotPath(n + 1))
     swapPointer(n + 1)
     (0 to n).foreach { i =>
       val p = Paths.get(snapshotPath(i))
@@ -231,6 +231,12 @@ class StateStore(val dir: String) {
   * fixture), so the logic lives here and both the [[StateStore]] instance
   * method and [[StateBackend]]-driven pipelines delegate to it. */
 object StateStore {
+
+  /** Writer options of every state write: parquet page CRCs ON, whatever
+    * the session says. The state outlives every run, and a silently
+    * corrupt page would shrink dedup for all later runs — sink files may
+    * trade the checksum for write speed (Sinks.write), the state never. */
+  val DurableWrite: Map[String, String] = Map("parquet.page.write-checksum.enabled" -> "true")
 
   /**
    * Dedup: anti-join incoming rows against known content ids

@@ -72,44 +72,24 @@ object StreamingPipeline {
         val marker = markerDir.resolve(s"batch-$batchId")
         val batchDir = java.nio.file.Paths.get(s"$outDir/routed/batch_id=$batchId")
         if (!java.nio.file.Files.exists(marker)) {
-          val fresh =
-            if (cfg.skipKnownLogs)
-              // when the (opt-in) bloom prune is on, its threshold decision
-              // reads the backend's sizeHint — memoized per committed
-              // version in BOTH backends (SnapshotStateBackend via
-              // liveRowCount, CatalogStateBackend via cachedCount), so no
-              // full state count per micro-batch
-              StateStore.dedup(batch, backend.load(spark, cfg.nowEpochSec),
-                withinBatch = cfg.dedupWithinRun,
-                bloomPruneThreshold = cfg.bloomPruneThreshold,
-                knownSizeHint =
-                  if (cfg.bloomPruneThreshold >= 0) backend.sizeHint(spark)
-                  else -1L)
-            else if (cfg.dedupWithinRun) batch.dropDuplicates("doc_id")
-            else batch
-          val replayAfterStateCommit =
-            java.nio.file.Files.exists(batchDir) && fresh.isEmpty
-          if (!replayAfterStateCommit) {
-            val inflated =
-              if (cfg.duplicate > 1)
-                fresh.withColumn("__dup", explode(array_repeat(lit(1), cfg.duplicate)))
-                  .drop("__dup")
-              else fresh
-            val routed = Pipeline.routedRecords(inflated, cfg.rules, cfg.enabledTypes)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              routed.write.mode("overwrite").parquet(batchDir.toString)
-              Sinks.prtgShape(routed)
-                .write.mode("overwrite").parquet(s"$outDir/prtg_batches/batch_id=$batchId")
-              transport.foreach(send => send(routed))
-              routedTotal.addAndGet(routed.count())
+          // the batch core of Pipeline.run: one materialization serves the
+          // writes, the counts and the state commit's ids
+          val b = Pipeline.materialize(spark, batch, backend, cfg)
+          try {
+            val replayAfterStateCommit =
+              java.nio.file.Files.exists(batchDir) && b.rowsFresh == 0
+            if (!replayAfterStateCommit) {
+              Sinks.write(b.routed, batchDir.toString)
+              Sinks.write(Sinks.prtgShape(b.routed), s"$outDir/prtg_batches/batch_id=$batchId")
+              transport.foreach(send => send(b.routed))
+              routedTotal.addAndGet(b.stats.rowsRouted)
               // commit all received ids (filtered rows included — reference
               // semantics, src/collector.rs:161) strictly after the writes
-              backend.commit(spark, fresh.select("doc_id"), "doc_id",
-                cfg.expirationEpochSec, cfg.nowEpochSec)
+              backend.commit(spark, b.ids, "doc_id",
+                cfg.expirationEpochSec, cfg.nowEpochSec, knownRows = b.rowsFresh)
               ()
-            } finally routed.unpersist()
-          }
+            }
+          } finally b.release()
           // durable batch-completion marker (atomic create-and-move, like
           // the state pointer swap)
           java.nio.file.Files.createDirectories(markerDir)

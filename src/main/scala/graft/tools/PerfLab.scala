@@ -41,7 +41,8 @@ object PerfLab {
 
   /** A/B the COLUMNAR routed-cache build cost: compression on (Spark
     * default) vs off. The cache materialization measured ~4.7 s of the
-    * ~7.5 s pipeline (PipelineProfile round 6); the token arrays compress
+    * ~7.5 s pipeline (round 6; per-layer splits of the pipeline now come
+    * from `python3 perfbench/run.py --trace 1`); the token arrays compress
     * poorly (near-random ints) so the encode work may be mostly wasted.
     * Runs with cacheViaCheckpoint=false explicitly — the round-6 default
     * flipped to localCheckpoint, which never builds the columnar cache
